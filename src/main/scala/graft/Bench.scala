@@ -181,16 +181,19 @@ object Bench {
     // IS the relation ([[SparkEntry.timedBuilderGates]]) are REBUILT inside
     // that gate's timed row — those six floors measure real work; the
     // prebuild copy only shields earlier-sweeping consumers.
-    val prebuild: Seq[(String, Double)] = {
+    // A relation that failed to build gets no time: its message rides
+    // `prebuild_failed`, and its consumers pay the build when they run.
+    val prebuild = {
       val pt0 = System.nanoTime()
-      val r = try SparkEntry.prebuildShared(spark, sfDir)
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] prebuild failed: ${e.getMessage}"); Seq.empty }
+      val r = SparkEntry.prebuildShared(spark, sfDir)
+      r.failed.foreach { case (n, msg) => System.err.println(s"[bench] prebuild $n failed: $msg") }
       System.err.println(f"[bench] shared-relation prebuild at $sfDir in ${(System.nanoTime() - pt0) / 1e9}%.0f s")
       r
     }
-    val prebuildSec  = prebuild.map(_._2).sum
-    val prebuildJson = prebuild.map { case (n, t) => f""""$n":$t%.3f""" }.mkString("{", ",", "}")
+    val prebuildSec  = prebuild.built.map(_._2).sum
+    val prebuildJson = prebuild.built.map { case (n, t) => f""""$n":$t%.3f""" }.mkString("{", ",", "}")
+    val prebuildFailedJson = prebuild.failed
+      .map { case (n, msg) => s""""$n":${Verify.jsonString(msg)}""" }.mkString("{", ",", "}")
     val buildersJson = SparkEntry.timedBuilderGates.toSeq.sortBy(_._1)
       .map { case (g, rel) => s""""$g":"$rel"""" }.mkString("{", ",", "}")
 
@@ -232,6 +235,7 @@ object Bench {
       val total = rs.map(_.floor).sum
       f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"cold":$cold,"runs":$rc,""" +
         f""""prebuild_sec":$prebuildSec%.3f,"warmup_sec":$warmupSec%.3f,"prebuild":$prebuildJson,""" +
+        f""""prebuild_failed":$prebuildFailedJson,""" +
         f""""timed_builders":$buildersJson,""" +
         f""""sf":"$sfDir","fingerprint":$fingerprint,"complete":$done}"""
     }

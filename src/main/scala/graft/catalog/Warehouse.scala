@@ -1,7 +1,7 @@
 package graft.catalog
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import scala.jdk.CollectionConverters._
 import scala.util.Try
@@ -73,7 +73,20 @@ class Warehouse(val spark: SparkSession, val root: String) {
     }.mkString("[", ",", "]")
     val json = s"""{"shardIntervalMs":${m.shardIntervalMs},"retentionMs":${m.retentionMs},"fields":$fields}"""
     Files.createDirectories(Paths.get(c.path(root)))
-    Files.write(Paths.get(metaPath(c)), json.getBytes(StandardCharsets.UTF_8))
+    replaceFile(metaPath(c), json)
+  }
+
+  /** Write `path` through a sibling temp file and an atomic rename: the
+    * lock-free readers ([[read]] → readMeta) see the old or the new file,
+    * never a truncated one. */
+  private def replaceFile(path: String, content: String): Unit = {
+    val target = Paths.get(path)
+    // not createTempFile: its owner-only permissions would stick to the target
+    val tmp = target.resolveSibling(s".${target.getFileName}.${java.util.UUID.randomUUID}.tmp")
+    try {
+      Files.write(tmp, content.getBytes(StandardCharsets.UTF_8))
+      Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
+    } finally Files.deleteIfExists(tmp)
   }
 
   /** shard interval + retention for a registered metric — the
@@ -565,9 +578,8 @@ class Warehouse(val spark: SparkSession, val root: String) {
     readMeta(c).toRight(s"metric ${c.metric} does not exist").map { m =>
       withWriteLock(c) {
         val keyJson = keys.map(k => "\"" + k + "\"").mkString("[", ",", "]")
-        Files.write(Paths.get(rollupCfgPath(c)),
-          s"""{"stepMs":$stepMs,"keys":$keyJson,"keepOnEvict":$keepOnEvict}"""
-            .getBytes(StandardCharsets.UTF_8))
+        replaceFile(rollupCfgPath(c),
+          s"""{"stepMs":$stepMs,"keys":$keyJson,"keepOnEvict":$keepOnEvict}""")
         rebuildRollupLocked(c, m, stepMs)
       }
     }

@@ -490,6 +490,30 @@ class WarehouseSpec extends SparkTestBase {
     new Warehouse(spark, root).read(c).fold(fail(_), _.df.count()) shouldBe 10L
   }
 
+  it should "keep meta.json readable for lock-free readers while a writer appends" in {
+    // read() parses meta.json without the write lock; the file is replaced
+    // by an atomic rename, so a read overlapping an append sees the old or
+    // the new schema — never a truncated file ("metric ... does not exist")
+    val (_, wh, _) = freshEngine()
+    val c = Coords("db", "ns", "mrace")
+    wh.append(c, Seq((0L, 0.0)).toDF("timestamp", "value"), tags = Set.empty).isRight shouldBe true
+    val done   = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val reads  = new java.util.concurrent.atomic.AtomicInteger(0)
+    val misses = new java.util.concurrent.atomic.AtomicInteger(0)
+    val reader = new Thread(() =>
+      while (!done.get()) {
+        if (wh.read(c).isLeft) misses.incrementAndGet()
+        reads.incrementAndGet()
+      })
+    reader.start()
+    try (1 to 40).foreach { i =>
+      wh.append(c, Seq((i * 1000L, i.toDouble)).toDF("timestamp", "value"), tags = Set.empty)
+        .isRight shouldBe true
+    } finally { done.set(true); reader.join() }
+    reads.get() should be > 0
+    misses.get() shouldBe 0
+  }
+
   it should "serialize schema-union validation across two driver PROCESSES" in {
     // the genuinely-two-JVM shape the advisory file lock exists for
     // (reference guarantee: one SchemaCoordinator validates every schema
