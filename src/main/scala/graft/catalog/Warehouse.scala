@@ -44,12 +44,26 @@ final case class Coords(db: String, namespace: String, metric: String) {
  * cleanly. The file lock blocks until the peer releases; in-JVM overlap
  * (which would throw `OverlappingFileLockException`) is prevented by the
  * shared monitor taken first.
+ *
+ * Single-record [[insert]]s take the reference's accumulate-then-flush
+ * path (`WriteCoordinator.accumulateOperation`, `MetricAccumulatorActor`):
+ * each record is appended to a log segment under `<metric>/wal/` and
+ * forced to disk before it is acknowledged, then held in a JVM-wide
+ * [[MetricLog]] buffer. A daemon flusher writes the buffer as one parquet
+ * batch when it holds [[WriteLog.FlushRecords]] records or its oldest
+ * record is [[WriteLog.FlushAgeNanos]] old. [[read]] serves the flushed
+ * files plus a snapshot of the buffer, so a JVM reads its own writes;
+ * another process sees them once flushed. Crash recovery and segment
+ * ownership are described at [[recoverLocked]]. Bulk [[append]] writes
+ * parquet directly.
  */
 class Warehouse(val spark: SparkSession, val root: String) {
 
+  private def metricKey(c: Coords): String = Paths.get(c.path(root)).toAbsolutePath.normalize.toString
+
   /** monitor + advisory file lock around every mutating metric op. */
   private def withWriteLock[A](c: Coords)(body: => A): A =
-    Warehouse.monitorFor(Paths.get(c.path(root)).toAbsolutePath.normalize.toString).synchronized {
+    Warehouse.monitorFor(metricKey(c)).synchronized {
       Files.createDirectories(Paths.get(c.path(root)))
       val ch = java.nio.channels.FileChannel.open(
         Paths.get(c.path(root), ".lock"),
@@ -231,11 +245,7 @@ class Warehouse(val spark: SparkSession, val root: String) {
         } finally {
           // staged leftovers from a failure are catalog-invisible; still,
           // sweep them so the root carries no dead bytes
-          if (Files.exists(tmpBase)) {
-            val w = Files.walk(tmpBase)
-            try w.iterator.asScala.toSeq.sortBy(-_.getNameCount).foreach(Files.deleteIfExists(_))
-            finally w.close()
-          }
+          deleteTree(tmpBase)
           try Files.deleteIfExists(Paths.get(root, ".restore-tmp")) // if now empty
           catch { case _: java.nio.file.DirectoryNotEmptyException => () } // a peer restore's staging
           ()
@@ -291,12 +301,7 @@ class Warehouse(val spark: SparkSession, val root: String) {
       shardIntervalMs: Long = DefaultShardIntervalMs,
       retentionMs: Long = 0L
   ): Either[String, Long] = withWriteLock(c) {
-    val incoming = MetricSchema.fromMapping(df.schema, tags)
-    val meta = readMeta(c) match {
-      case None           => Right(Meta(incoming, shardIntervalMs, retentionMs))
-      case Some(existing) => existing.schema.union(incoming).map(u => existing.copy(schema = u))
-    }
-    meta.map { m =>
+    unionMeta(c, MetricSchema.fromMapping(df.schema, tags), shardIntervalMs, retentionMs).map { m =>
       // the ingested-row count rides the write job as an observed metric —
       // a post-write df.count() would re-run the whole batch plan per ingest
       val obs = org.apache.spark.sql.Observation()
@@ -309,7 +314,6 @@ class Warehouse(val spark: SparkSession, val root: String) {
       sharded
         .repartition(col("shard"))
         .write.partitionBy("shard").mode("append").parquet(dataPath(c))
-      writeMeta(c, m)
       // write-time rollup maintenance: this batch's stats segment appends
       // to the log (reference: facet update per accumulated batch)
       rollupStep(c).foreach(step => appendRollupSegment(c, df, step))
@@ -318,19 +322,47 @@ class Warehouse(val spark: SparkSession, val root: String) {
     }
   }
 
-  /** Single-record INSERT statement (timestamp defaults to the context now). */
+  /** `incoming` unioned into the stored metadata (a new metric starts from
+    * `incoming` with the given sharding and retention); meta.json is
+    * rewritten only when the union changed it. Caller holds the write lock. */
+  private def unionMeta(c: Coords, incoming: MetricSchema, shardIntervalMs: Long,
+                        retentionMs: Long): Either[String, Meta] = {
+    val stored = readMeta(c)
+    stored.fold[Either[String, Meta]](Right(Meta(incoming, shardIntervalMs, retentionMs))) { e =>
+      e.schema.union(incoming).map(u => e.copy(schema = u))
+    }.map { m =>
+      if (!stored.contains(m)) writeMeta(c, m)
+      m
+    }
+  }
+
+  /**
+   * Single-record INSERT statement (timestamp defaults to the context now).
+   * Acknowledged once the record is forced to the metric's log; it is
+   * readable in this JVM at once and lands in parquet with the next flush.
+   */
   def insert(stmt: Ast.InsertStatement)(implicit tc: TimeContext): Either[String, Long] = {
-    val c  = Coords(stmt.db, stmt.namespace, stmt.metric)
-    val ts = stmt.timestamp.getOrElse(tc.currentTime)
-    val cols: Seq[(String, Any, DataType, FieldClass)] =
-      Seq(("timestamp", ts, LongType, FieldClass.Timestamp: FieldClass),
-          ("value", stmt.value, typeOf(stmt.value), FieldClass.Value: FieldClass)) ++
-        stmt.dimensions.toSeq.sortBy(_._1).map { case (k, v) => (k, v, typeOf(v), FieldClass.Dimension: FieldClass) } ++
-        stmt.tags.toSeq.sortBy(_._1).map { case (k, v) => (k, v, typeOf(v), FieldClass.Tag: FieldClass) }
-    val schema = StructType(cols.map { case (n, _, dt, _) => StructField(n, dt) })
-    val row    = Row.fromSeq(cols.map(_._2))
-    val df     = spark.createDataFrame(java.util.List.of(row), schema)
-    append(c, df, tags = cols.collect { case (n, _, _, FieldClass.Tag) => n }.toSet)
+    val c = Coords(stmt.db, stmt.namespace, stmt.metric)
+    val values: Map[String, Any] =
+      (stmt.dimensions ++ stmt.tags ++ Map("value" -> stmt.value)).map { case (k, v) => k -> loggable(v) } +
+        ("timestamp" -> stmt.timestamp.getOrElse(tc.currentTime))
+    val schema = StructType(values.toSeq.sortBy(_._1).map { case (n, v) => StructField(n, typeOf(v)) })
+    val log    = logFor(c)
+    val res = withWriteLock(c) {
+      unionMeta(c, MetricSchema.fromMapping(schema, stmt.tags.keySet), DefaultShardIntervalMs, 0L).map { _ =>
+        log.append(values)
+        1L
+      }
+    }
+    Warehouse.Flusher.started()
+    if (log.records.size >= WriteLog.FlushRecords) Warehouse.Flusher.wake()
+    res
+  }
+
+  /** the value as the log stores it: long, int, double or string */
+  private def loggable(v: Any): Any = v match {
+    case _: Long | _: Int | _: Double | _: String => v
+    case other                                    => String.valueOf(other)
   }
 
   private def typeOf(v: Any): DataType = v match {
@@ -340,29 +372,232 @@ class Warehouse(val spark: SparkSession, val root: String) {
     case _         => StringType
   }
 
+  // ---- write buffer ------------------------------------------------------
+
+  /** The metric's write buffer. On its first use in this JVM it recovers
+    * the log segments no live process owns ([[recoverLocked]]); a buffer
+    * whose log directory vanished (the metric was dropped by another
+    * process or its directory removed) is discarded first. */
+  private[catalog] def logFor(c: Coords): MetricLog = {
+    val key = metricKey(c)
+    val log = Warehouse.logs.computeIfAbsent(key, k => new MetricLog(Paths.get(k)))
+    log.owner = Some((this, c))
+    Warehouse.discardIfStale(key, log)
+    if (!log.recovered) {
+      if (Files.isDirectory(log.walDir)) withWriteLock(c) { if (!log.recovered) recoverLocked(c, log) }
+      log.recovered = true
+    }
+    log
+  }
+
+  /**
+   * Exactly-once recovery of a metric's log, under its write lock:
+   *  - a flush marked published (`wal/<id>.published`) gets its remaining
+   *    renames finished and its segments retired;
+   *  - every other segment that no live process holds locked is adopted:
+   *    its flush staging is deleted and its records are replayed into the
+   *    buffer, to be flushed again. A segment locked by a live process is
+   *    left to its owner, so two JVMs never replay the same records.
+   */
+  private def recoverLocked(c: Coords, log: MetricLog): Unit = {
+    val wal = log.walDir
+    WriteLog.markerIds(wal).foreach(id => finishPublished(c, log, id))
+    val adopted = WriteLog.segmentIds(wal).flatMap(id => WriteLog.adopt(wal, id))
+    adopted.foreach { case (seg, _) => deleteTree(WriteLog.stagingDir(log.dir, seg.id)) }
+    val (empty, full) = adopted.partition(_._2.isEmpty)
+    empty.foreach { case (seg, _) => Files.deleteIfExists(seg.path); seg.release() }
+    val now = System.nanoTime()
+    log.pending = log.pending ++ full.map(_._1)
+    log.records = log.records ++ full.flatMap(_._2).map(Buffered(_, now))
+  }
+
+  /** A frozen buffer prefix on its way to parquet: `id` names its staging
+    * directory and marker, `segments` are the log segments it retires. */
+  private[catalog] final class Flush(val id: Long, val segments: Seq[Long], val rows: Vector[Buffered], val meta: Meta)
+
+  /** Write the metric's buffered records to parquet now; the flusher does
+    * this by size and age. Waits for a flush already in flight. */
+  private[catalog] def flush(c: Coords): Unit = flushBuffered(c, logFor(c))
+
+  /** Freeze under the write lock, write parquet outside it (inserts go on),
+    * publish under it again. */
+  private[catalog] def flushBuffered(c: Coords, log: MetricLog): Unit = log.flushing.synchronized {
+    withWriteLock(c)(freeze(c, log)).foreach { f =>
+      stage(c, f) // a failed stage is cleared by the retry's stage or by recovery
+      withWriteLock(c)(publish(c, log, f))
+    }
+  }
+
+  /** Run a mutation under the write lock once every buffered record of the
+    * metric is in parquet: an in-flight flush finishes first, the rest is
+    * flushed under the lock. */
+  private def flushedThen[A](c: Coords)(body: => A): A = {
+    val log = logFor(c)
+    log.flushing.synchronized {
+      withWriteLock(c) {
+        freeze(c, log).foreach { f => stage(c, f); publish(c, log, f) }
+        body
+      }
+    }
+  }
+
+  /** Seal the open segment and take the whole buffer as the flush prefix.
+    * Caller holds the write lock. */
+  private[catalog] def freeze(c: Coords, log: MetricLog): Option[Flush] =
+    if (log.records.isEmpty) None
+    else readMeta(c).map { m =>
+      log.sealCurrent()
+      new Flush(log.pending.last.id, log.pending.map(_.id), log.records, m)
+    }
+
+  /** One parquet batch of `rows` in the canonical columns plus `shard`. */
+  private def bufferedFrame(m: Meta, rows: Seq[Buffered]): DataFrame = {
+    val struct = m.schema.toStruct
+    spark.createDataFrame(rows.map { b =>
+      Row.fromSeq(struct.fieldNames.toSeq.map(b.values.getOrElse(_, null)) :+
+        Math.floorDiv(b.values("timestamp").asInstanceOf[Long], m.shardIntervalMs))
+    }.asJava, struct.add("shard", LongType))
+  }
+
+  /** Write the prefix as parquet (one file per shard) and its rollup
+    * segment under the staging directory, outside `data/`. No lock held. */
+  private[catalog] def stage(c: Coords, f: Flush): Unit = {
+    val dir = WriteLog.stagingDir(Paths.get(c.path(root)), f.id)
+    deleteTree(dir)
+    val df = bufferedFrame(f.meta, f.rows)
+    df.coalesce(1).write.partitionBy("shard").parquet(dir.resolve("data").toString)
+    rollupCfg(c).foreach { case (step, keys) =>
+      graft.operators.Rollup.buildForServing(df, keys, "timestamp", "value", step)
+        .write.parquet(dir.resolve("rollup").toString)
+    }
+  }
+
+  /** Commit a staged flush: mark it published (the commit point), rename
+    * its files into place and drop the prefix from the buffer under the
+    * visibility lock, then retire its segments. If anything after the mark
+    * fails, the in-memory buffer is dropped and rebuilt from disk by
+    * recovery on next use. Caller holds the write lock. */
+  private[catalog] def publish(c: Coords, log: MetricLog, f: Flush): Unit = {
+    markPublished(log, f)
+    try {
+      log.withVisibility(write = true) {
+        moveStaged(c, f.id)
+        log.records = log.records.drop(f.rows.size)
+      }
+      retire(log, f.id, f.segments)
+      log.retryAtNanos = 0L
+    } catch {
+      case e: Throwable => log.discard(); log.recovered = false; throw e
+    }
+  }
+
+  private[catalog] def markPublished(log: MetricLog, f: Flush): Unit = {
+    val marker = WriteLog.markerPath(log.walDir, f.id)
+    val tmp    = marker.resolveSibling(s".${marker.getFileName}.tmp")
+    val ch = java.nio.channels.FileChannel.open(tmp, java.nio.file.StandardOpenOption.CREATE,
+      java.nio.file.StandardOpenOption.WRITE, java.nio.file.StandardOpenOption.TRUNCATE_EXISTING)
+    try {
+      ch.write(java.nio.ByteBuffer.wrap(f.segments.mkString(",").getBytes(StandardCharsets.UTF_8)))
+      ch.force(true)
+    } finally ch.close()
+    Files.move(tmp, marker, StandardCopyOption.ATOMIC_MOVE)
+  }
+
+  /** Finish a published flush found on disk: the renames it has left, then
+    * its segments. */
+  private def finishPublished(c: Coords, log: MetricLog, id: Long): Unit = {
+    val covered = new String(Files.readAllBytes(WriteLog.markerPath(log.walDir, id)), StandardCharsets.UTF_8)
+      .split(",").filter(_.nonEmpty).map(_.toLong).toSeq
+    log.withVisibility(write = true)(moveStaged(c, id))
+    retire(log, id, covered)
+  }
+
+  /** Rename a flush's staged files into `data/shard=…/` and `rollup/`.
+    * Idempotent: a file already moved is no longer staged. */
+  private[catalog] def moveStaged(c: Coords, id: Long): Unit = {
+    val staged = WriteLog.stagingDir(Paths.get(c.path(root)), id)
+    def moveFiles(from: java.nio.file.Path, to: java.nio.file.Path): Unit =
+      if (Files.isDirectory(from)) {
+        val files = listDir(from).filter(p => Files.isRegularFile(p) && !p.getFileName.toString.contains("_SUCCESS"))
+        if (files.nonEmpty) Files.createDirectories(to)
+        files.foreach(p => Files.move(p, to.resolve(p.getFileName), StandardCopyOption.ATOMIC_MOVE))
+      }
+    listDir(staged.resolve("data")).filter(Files.isDirectory(_))
+      .foreach(sh => moveFiles(sh, Paths.get(dataPath(c)).resolve(sh.getFileName)))
+    moveFiles(staged.resolve("rollup"), Paths.get(rollupDir(c)))
+  }
+
+  /** Delete a published flush's segments, staging and marker, in that
+    * order: the marker goes last, so a crash in between is finished again. */
+  private[catalog] def retire(log: MetricLog, id: Long, covered: Seq[Long]): Unit = {
+    val (mine, rest) = log.pending.partition(s => covered.contains(s.id))
+    log.pending = rest
+    covered.foreach(s => Files.deleteIfExists(WriteLog.segmentPath(log.walDir, s)))
+    mine.foreach(_.release())
+    deleteTree(WriteLog.stagingDir(log.dir, id))
+    Files.deleteIfExists(WriteLog.markerPath(log.walDir, id))
+    ()
+  }
+
+  private def listDir(dir: java.nio.file.Path): Seq[java.nio.file.Path] =
+    if (!Files.isDirectory(dir)) Seq.empty
+    else { val s = Files.list(dir); try s.iterator.asScala.toSeq finally s.close() }
+
+  private def deleteTree(dir: java.nio.file.Path): Unit =
+    if (Files.exists(dir)) {
+      val w = Files.walk(dir)
+      try w.iterator.asScala.toSeq.sortBy(-_.getNameCount).foreach(Files.deleteIfExists(_))
+      finally w.close()
+    }
+
   // ---- read path ---------------------------------------------------------
 
   /** Open a metric for querying; the shard column is exposed to the
     * executor for pruning but hidden from projections. Live time bounds come
     * from the shard directory names (metadata-only — the reference's
     * `[lowerShardBound, upperShardBound]` of live locations). */
-  def read(c: Coords): Either[String, MetricRef] =
-    readMeta(c).toRight(s"metric ${c.metric} does not exist").map { m =>
-      val df = spark.read.schema(m.schema.toStruct.add("shard", LongType)).parquet(dataPath(c))
-      val shardIds = subdirs(dataPath(c)).filter(_.startsWith("shard=")).map(_.stripPrefix("shard=").toLong)
+  def read(c: Coords): Either[String, MetricRef] = {
+    val log = logFor(c)
+    // one consistent cut: a flush's publish swaps files in and drops the
+    // buffer prefix under the write side of this lock
+    log.withVisibility(write = false) {
+      readMeta(c).map { m =>
+        val struct = m.schema.toStruct.add("shard", LongType)
+        val files =
+          if (Files.isDirectory(Paths.get(dataPath(c)))) spark.read.schema(struct).parquet(dataPath(c))
+          else spark.createDataFrame(java.util.List.of[Row](), struct)
+        val fileShards = subdirs(dataPath(c)).filter(_.startsWith("shard=")).map(_.stripPrefix("shard=").toLong)
+        (m, files, fileShards, log.records, storedRollup(c))
+      }
+    }.toRight(s"metric ${c.metric} does not exist").map { case (m, files, fileShards, buffered, stored) =>
+      val snapshot = if (buffered.isEmpty) None else Some(bufferedFrame(m, buffered))
+      val bufferedPerShard = buffered
+        .groupMapReduce(b => Math.floorDiv(b.values("timestamp").asInstanceOf[Long], m.shardIntervalMs))(_ => 1L)(_ + _)
+      val shardIds = (fileShards ++ bufferedPerShard.keys).distinct.sorted
       val bounds =
         if (shardIds.isEmpty) None
         else Some((shardIds.min * m.shardIntervalMs, (shardIds.max + 1) * m.shardIntervalMs - 1))
-      MetricRef(df, m.schema,
-        Some(ShardInfo("shard", m.shardIntervalMs, bounds, shardIds, Some(shardRowCount(c, _)))),
-        rollup = rollupRef(c))
+      // the files this read lists, per shard: footer counts must match them
+      lazy val filesPerShard = files.inputFiles.toSeq.map(new Path(_))
+        .groupBy(_.getParent.getName.stripPrefix("shard=").toLong)
+      val rowCount = (sid: Long) =>
+        footerRows(filesPerShard.getOrElse(sid, Nil).take(Warehouse.maxFooterReadsPerShard)) +
+          bufferedPerShard.getOrElse(sid, 0L)
+      val rollup = rollupCfg(c).flatMap { case (step, keys) =>
+        val live = snapshot.map(graft.operators.Rollup.buildForServing(_, keys, "timestamp", "value", step))
+        (stored ++ live).reduceOption(_ unionByName _)
+          .map(s => RollupRef(graft.operators.Rollup.coalesceStats(s), step))
+      }
+      MetricRef(snapshot.fold(files)(files.union), m.schema,
+        Some(ShardInfo("shard", m.shardIntervalMs, bounds, shardIds, Some(rowCount))), rollup = rollup)
     }
+  }
 
   /**
-   * Metadata-only row count of one shard: the sum of the parquet footers'
+   * Metadata-only row count of parquet files: the sum of their footers'
    * record counts, read driver-side. No Spark job, no data pages — a
    * footer is a few KB regardless of shard size, which is what lets the
-   * executor's O3 narrowing stay free at 100 TB. Guarded against
+   * executor's O3 narrowing stay free at 100 TB. [[read]] guards against
    * pathological file counts: a shard that [[compact]] has not yet visited
    * can hold tens of thousands of micro-batch files, and footer-walking
    * those serially would stall plan construction — past
@@ -370,34 +605,29 @@ class Warehouse(val spark: SparkSession, val root: String) {
    * result is then a LOWER bound, which is the only safe direction: O3
    * keeps pulling in shards until the counted total reaches the limit, so
    * under-counting can only widen the narrowed set (extra shards opened),
-   * never drop rows the query needs.
+   * never drop rows the query needs. A file can vanish before its footer
+   * is opened while racing compact's rename-aside swap — it counts as 0
+   * (the same lower bound) instead of failing plan construction with
+   * FileNotFoundException.
    */
-  private def shardRowCount(c: Coords, sid: Long): Long =
-    footerRowCount(s"${dataPath(c)}/shard=$sid", Warehouse.maxFooterReadsPerShard)
-
-  /** Sum of the parquet footers' record counts under `dirStr` (driver-side
-    * metadata only, at most `cap` footers). A file (or the whole dir) can
-    * vanish between listStatus and the footer open while racing compact's
-    * rename-aside swap — it counts as 0 (the documented lower bound, which
-    * only ever WIDENS O3's narrowed set) instead of failing plan
-    * construction with FileNotFoundException. */
-  private def footerRowCount(dirStr: String, cap: Int = Int.MaxValue): Long = {
+  private def footerRows(files: Seq[Path]): Long = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val dir  = new Path(dirStr)
-    val fs   = dir.getFileSystem(conf)
-    if (!fs.exists(dir)) return 0L
-    try fs.listStatus(dir)
-      .filter(f => f.isFile && !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
-      .take(cap)
-      .map { f =>
-        try {
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf)
-          val r  = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try r.getRecordCount finally r.close()
-        } catch { case _: java.io.FileNotFoundException => 0L }
-      }
-      .sum
-    catch { case _: java.io.FileNotFoundException => 0L }
+    files.map { f =>
+      try {
+        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf)
+        val r  = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+        try r.getRecordCount finally r.close()
+      } catch { case _: java.io.FileNotFoundException => 0L }
+    }.sum
+  }
+
+  /** [[footerRows]] of the data files directly under `dirStr`. */
+  private def footerRowCount(dirStr: String): Long = {
+    val dir = new Path(dirStr)
+    val fs  = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(dir)) 0L
+    else footerRows(fs.listStatus(dir).toSeq.map(_.getPath)
+      .filter(p => !p.getName.startsWith("_") && !p.getName.startsWith(".")))
   }
 
   // ---- delete / drop / retention ----------------------------------------
@@ -411,7 +641,7 @@ class Warehouse(val spark: SparkSession, val root: String) {
   def delete(stmt: Ast.DeleteStatement, targetBytes: Long = 128L << 20)(implicit tc: TimeContext): Either[String, Unit] = {
     val c = Coords(stmt.db, stmt.namespace, stmt.metric)
     readMeta(c).toRight(s"metric ${c.metric} does not exist").map { m =>
-      withWriteLock(c) {
+      flushedThen(c) {
         val spans    = TimeBuckets.extractSpans(Some(stmt.where), tc)
         val interval = m.shardIntervalMs
         val allShards = subdirs(dataPath(c)).filter(_.startsWith("shard=")).map(_.stripPrefix("shard=").toLong)
@@ -478,7 +708,7 @@ class Warehouse(val spark: SparkSession, val root: String) {
       targetBytes: Long = 128L << 20
   ): Either[String, Seq[Long]] =
     readMeta(c).toRight(s"metric ${c.metric} does not exist").map { m =>
-      withWriteLock(c) {
+      flushedThen(c) {
         val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
         recoverCompact(c, fs)
         subdirs(dataPath(c)).filter(_.startsWith("shard=")).flatMap { sh =>
@@ -531,10 +761,17 @@ class Warehouse(val spark: SparkSession, val root: String) {
     }
   }
 
-  /** DROP METRIC: remove data + catalog entry. */
-  def drop(c: Coords): Unit = withWriteLock(c) {
-    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new Path(c.path(root)), true)
+  /** DROP METRIC: remove data + catalog entry. Buffered records and the
+    * log go with it, unflushed (an in-flight flush finishes first). */
+  def drop(c: Coords): Unit = {
+    val log = logFor(c)
+    log.flushing.synchronized {
+      withWriteLock(c) {
+        log.discard()
+        val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+        fs.delete(new Path(c.path(root)), true)
+      }
+    }
   }
 
   /**
@@ -576,7 +813,7 @@ class Warehouse(val spark: SparkSession, val root: String) {
                    keepOnEvict: Boolean = false): Either[String, Unit] = {
     require(stepMs > 0, "stepMs must be positive")
     readMeta(c).toRight(s"metric ${c.metric} does not exist").map { m =>
-      withWriteLock(c) {
+      flushedThen(c) {
         val keyJson = keys.map(k => "\"" + k + "\"").mkString("[", ",", "]")
         replaceFile(rollupCfgPath(c),
           s"""{"stepMs":$stepMs,"keys":$keyJson,"keepOnEvict":$keepOnEvict}""")
@@ -612,7 +849,7 @@ class Warehouse(val spark: SparkSession, val root: String) {
   def rebuildRollup(c: Coords): Either[String, Unit] =
     readMeta(c).toRight(s"metric ${c.metric} does not exist").flatMap { m =>
       rollupStep(c).toRight(s"rollup not enabled for ${c.metric}").map { step =>
-        withWriteLock(c) { rebuildRollupLocked(c, m, step) }
+        flushedThen(c) { rebuildRollupLocked(c, m, step) }
       }
     }
 
@@ -640,14 +877,9 @@ class Warehouse(val spark: SparkSession, val root: String) {
     ()
   }
 
-  /** The merged serving view over the segment log, if enabled and built. */
-  private def rollupRef(c: Coords): Option[RollupRef] =
-    rollupStep(c).filter { _ =>
-      val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.exists(new Path(rollupDir(c)))
-    }.map { step =>
-      RollupRef(graft.operators.Rollup.coalesceStats(spark.read.parquet(rollupDir(c))), step)
-    }
+  /** The flushed segment log of the rollup, if enabled and built. */
+  private def storedRollup(c: Coords): Option[DataFrame] =
+    rollupStep(c).filter(_ => Files.isDirectory(Paths.get(rollupDir(c)))).map(_ => spark.read.parquet(rollupDir(c)))
 
   def evictExpired(c: Coords)(implicit tc: TimeContext): Either[String, Seq[Long]] =
     readMeta(c).toRight(s"metric ${c.metric} does not exist").flatMap { m =>
@@ -658,7 +890,7 @@ class Warehouse(val spark: SparkSession, val root: String) {
         // keepTier is read INSIDE the write lock so a concurrent
         // enableRollup toggling keepOnEvict can't race the sweep into
         // rebuilding the rollup after the shards it preserved are gone.
-        val (keepTier, evicted) = withWriteLock(c) {
+        val (keepTier, evicted) = flushedThen(c) {
           val keep   = rollupStep(c).isDefined && rollupKeepOnEvict(c)
           val cutoff = tc.currentTime - m.retentionMs
           val fs     = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -778,4 +1010,48 @@ object Warehouse {
     * throw instead of blocking). */
   private val monitors = new java.util.concurrent.ConcurrentHashMap[String, Object]()
   private[catalog] def monitorFor(key: String): Object = monitors.computeIfAbsent(key, _ => new Object)
+
+  /** JVM-wide write buffers, keyed like [[monitors]]. */
+  private[catalog] val logs = new java.util.concurrent.ConcurrentHashMap[String, MetricLog]()
+
+  /** Drop a buffer whose log directory is gone (see [[Warehouse.logFor]]);
+    * it recovers afresh on next use. */
+  private[catalog] def discardIfStale(key: String, log: MetricLog): Unit =
+    if (log.stale) monitorFor(key).synchronized {
+      if (log.stale) { log.discard(); log.recovered = false }
+    }
+
+  /** The daemon thread that flushes write buffers by size and age: it
+    * checks every buffer each second, or at once when an insert fills one. */
+  private[catalog] object Flusher {
+    private val TickMs = 1000L
+    private val signal = new Object
+    private lazy val thread = {
+      val t = new Thread(() => while (true) { await(); sweep() }, "graft-write-flusher")
+      t.setDaemon(true)
+      t.start()
+      t
+    }
+
+    def started(): Unit = { thread; () }
+    def wake(): Unit    = signal.synchronized(signal.notifyAll())
+    private def await(): Unit = signal.synchronized(signal.wait(TickMs))
+
+    private def sweep(): Unit = logs.forEach { (key, log) =>
+      discardIfStale(key, log)
+      if (log.due(System.nanoTime())) log.owner.foreach { case (wh, c) =>
+        val sc = wh.spark.sparkContext
+        try {
+          if (sc.isStopped) sys.error("its SparkSession is stopped")
+          // a job group of its own, not one inherited from the thread that started the flusher
+          sc.setJobGroup("graft-flush", s"flush ${c.db}.${c.namespace}.${c.metric}")
+          try wh.flushBuffered(c, log) finally sc.clearJobGroup()
+        } catch {
+          case scala.util.control.NonFatal(e) =>
+            log.retryAtNanos = System.nanoTime() + WriteLog.FlushAgeNanos
+            System.err.println(s"[graft-flush] ${c.db}.${c.namespace}.${c.metric}: ${e.getMessage}")
+        }
+      }
+    }
+  }
 }

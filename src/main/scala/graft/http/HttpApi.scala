@@ -55,6 +55,7 @@ class HttpApi(
     auth: GraftAuthProvider = GraftAuthProvider.AllowAll
 ) {
 
+  HttpApi.noDelay()
   private val mapper = new ObjectMapper()
   private var server: HttpServer = _
 
@@ -489,5 +490,19 @@ class HttpApi(
         }
       case _ => (404, """{"error":"unknown command"}""")
     }
+  }
+}
+
+object HttpApi {
+
+  /** Nagle off on the JDK server's sockets: a response goes out as headers,
+    * then body, and with Nagle on the body waits for the client's delayed
+    * ACK of the headers (tens of ms per keep-alive request). The server
+    * reads the property once, when it first creates a server in the JVM;
+    * a value the user set wins. */
+  private[http] def noDelay(): Unit = {
+    if (System.getProperty("sun.net.httpserver.nodelay") == null)
+      System.setProperty("sun.net.httpserver.nodelay", "true")
+    ()
   }
 }

@@ -77,7 +77,11 @@ class WsApi(
     running = true
     pool.execute(() =>
       while (running && !server.isClosed)
-        try { val s = server.accept(); pool.execute(() => handle(s)) }
+        try {
+          val s = server.accept()
+          s.setTcpNoDelay(true) // frames are small writes: no Nagle wait on the peer's delayed ACK
+          pool.execute(() => handle(s))
+        }
         catch { case _: Throwable => () } // closed during stop()
     )
     server.getLocalPort
